@@ -474,10 +474,10 @@ object Bench {
     }
 
     spark.stop()
-    // executor-isolation evidence lives in graft.tools.IsolationBench: in-
-    // bench runs of that experiment are poisoned by this VM's DAMON/
-    // kcompactd reclaim reacting to the resident 16g bench JVM (2-3x
-    // stalls); clean-state numbers + methodology are in BASELINE.md.
+    // executor isolation is not measured in-bench: runs of that experiment
+    // are poisoned by DAMON/kcompactd reclaim reacting to the resident 16g
+    // bench JVM (2-3x stalls); its clean-state numbers + methodology are in
+    // BASELINE.md.
     emit(partial = false)
     rmdir(work)
   }

@@ -1,59 +1,29 @@
 package graft.index
 
-import graft.analysis.Analyzer
 import graft.score.Similarity
 import graft.search.{Query, ScoredDoc, SegmentSearch}
 
 /** Single-process build/search over the same segment format — used by unit
   * tests (fast, no SparkSession) and as the 1-partition baseline that the
   * distributed build must byte-match (MultiSearcherRankingTest pattern,
-  * SURVEY.md §5.1). */
+  * SURVEY.md §5.1). The build runs the distributed build's own inverter
+  * (`IndexBuilder.invertPartitionSegments`) over all docs in one pass;
+  * SparkIndexSpec pins its bytes to `IndexBuilder.build`'s. */
 object LocalIndex {
 
-  /** docs = (docId, text) with dense ids 0..n-1 in order. */
+  /** docs = (docId, text) with dense ids 0..n-1. */
   def build(indexDir: String, docs: Seq[(Long, String)], analyzerName: String,
       docsPerSegment: Int = Int.MaxValue, storePositions: Boolean = true,
       storeTermVectors: Boolean = false, storePayloads: Boolean = false): IndexMeta = {
     new java.io.File(indexDir).mkdirs()
-    val analyzer = Analyzer.byName(analyzerName)
-    val numDocs = docs.size.toLong
-    val rows = docs.iterator.flatMap { case (id, text) =>
-      IndexBuilder.tokenizeDoc(analyzer, IndexBuilder.segIdOf(id, docsPerSegment),
-        id, text, storePositions, storePayloads)
-    }.toVector.sortBy(r => (r.segId, r.term, r.docId))(
-      Ordering.Tuple3(Ordering.Int, TermOrder.ordering, Ordering.Long))
-
-    val metas = scala.collection.mutable.ArrayBuffer.empty[SegmentMeta]
-    var writer: SegmentWriter = null
-    var curSeg = -1
-    var docBase = 0L
-    rows.foreach { r =>
-      if (r.segId != curSeg) {
-        if (writer != null) metas += writer.finish()
-        curSeg = r.segId
-        docBase = curSeg.toLong * docsPerSegment
-        val docCount = math.min(docsPerSegment.toLong, numDocs - docBase).toInt
-        writer = new SegmentWriter(indexDir, curSeg, docBase, docCount, analyzerName,
-          storePositions, storeTermVectors, storePayloads)
-        if (storeTermVectors) {
-          // doc-ordered vector sidecar from each doc's own analysis
-          docs.filter(d => d._1 >= docBase && d._1 < docBase + docCount)
-            .sortBy(_._1).foreach { case (id, text) =>
-              val entries = IndexBuilder.tokenizeDoc(analyzer, curSeg, id, text, storePositions)
-                .filter(_.term.nonEmpty).toArray.sortBy(_.term)(TermOrder.ordering)
-              writer.addDocVector((id - docBase).toInt, entries.map(_.term),
-                entries.map(_.freq), entries.map(_.positions))
-            }
-        }
-      }
-      val localDoc = (r.docId - docBase).toInt
-      if (r.term.isEmpty) writer.addDocLength(localDoc, r.dl)
-      else writer.addPosting(r.term, localDoc, r.freq, r.positions, 0, r.payloads)
+    val keyed = docs.sortBy(_._1).iterator.map { case (id, text) =>
+      ((IndexBuilder.segIdOf(id, docsPerSegment), id), text)
     }
-    if (writer != null) metas += writer.finish()
-
+    val metas = IndexBuilder.invertPartitionSegments(keyed, indexDir, analyzerName,
+      docsPerSegment, docs.size.toLong, storePositions,
+      storeVectors = storeTermVectors, storePayloads = storePayloads).toSeq
     val meta = IndexMeta(analyzerName, metas.map(_.docCount.toLong).sum,
-      metas.map(_.sumDocLength).sum, storePositions, metas.toSeq.sortBy(_.segId))
+      metas.map(_.sumDocLength).sum, storePositions, metas)
     IndexMetaIO.writeCommit(indexDir, meta)
     meta
   }

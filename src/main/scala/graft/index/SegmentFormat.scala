@@ -241,6 +241,12 @@ final class SegmentWriter(
       positions: Array[Array[Int]]): Unit = {
     require(storeVectors, "writer built without storeVectors")
     require(localDoc >= vecNextDoc, s"vectors out of order: $localDoc < $vecNextDoc")
+    var t = 1
+    while (t < terms.length) {
+      require(TermOrder.lt(terms(t - 1), terms(t)),
+        s"vector terms of doc $localDoc not strictly ascending: ${terms(t - 1)} >= ${terms(t)}")
+      t += 1
+    }
     while (vecNextDoc < localDoc) { // fill skipped docs with empty vectors
       vecOffsets(vecNextDoc) = vecOut.size.toLong
       vecOut.writeVInt(0)

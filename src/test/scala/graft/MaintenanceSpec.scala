@@ -154,6 +154,21 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(vec.map(_._3.toSeq) == exp.map(_._2.toSeq))
   }
 
+  test("term vectors must arrive strictly ascending in code-point order") {
+    val dir = Files.createTempDirectory("graft-tv-order").toString
+    val w = new SegmentWriter(dir, 0, 0L, 2, "whitespace", storePositions = false,
+      storeVectors = true)
+    // UTF-16 order puts the surrogate pair first; code-point order puts it last
+    val sup = new String(Character.toChars(0x1D11E))
+    intercept[IllegalArgumentException] {
+      w.addDocVector(0, Array(sup, "\uE000"), Array(1, 1), Array(Array.emptyIntArray, Array.emptyIntArray))
+    }
+    intercept[IllegalArgumentException] {
+      w.addDocVector(0, Array("a", "a"), Array(1, 1), Array(Array.emptyIntArray, Array.emptyIntArray))
+    }
+    w.addDocVector(0, Array("\uE000", sup), Array(1, 1), Array(Array.emptyIntArray, Array.emptyIntArray))
+  }
+
   test("multi-group compaction runs distributed and respects the merge factor") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-compact-par").toString

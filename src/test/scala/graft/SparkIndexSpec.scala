@@ -2,6 +2,7 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
+import java.security.MessageDigest
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,16 +34,35 @@ class SparkIndexSpec extends AnyFunSuite {
       pages.zipWithIndex.map { case (p, i) => (i.toLong, p.text) })
   }
 
-  private def fileHashes(dir: String): Map[String, Long] = {
+  /** SHA-256 of every segment file, keyed by its path under `dir`. */
+  private def fileHashes(dir: String): Map[String, String] = {
     def walk(f: File): Seq[File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val root = new File(dir).toPath
     walk(new File(dir))
       .filter(f => f.getName.endsWith(".bin") || f.getName.endsWith(".idx"))
       .map { f =>
-        val bytes = Files.readAllBytes(f.toPath)
-        val rel = f.getPath.stripPrefix(dir)
-        rel -> java.util.Arrays.hashCode(bytes).toLong
+        val digest = MessageDigest.getInstance("SHA-256").digest(Files.readAllBytes(f.toPath))
+        root.relativize(f.toPath).toString -> digest.map(b => f"$b%02x").mkString
       }.toMap
+  }
+
+  /** Pinned segment digests (`case -> path -> sha256`), recorded while the
+    * sortshuffle build mode still existed and wrote the same bytes. */
+  private lazy val golden: Map[String, Map[String, String]] = {
+    val src = scala.io.Source.fromResource("graft/segment-sha256.tsv")(scala.io.Codec.UTF8)
+    try src.getLines().filterNot(l => l.isEmpty || l.startsWith("#")).map(_.split('\t')).toSeq
+      .groupMap(_(0))(a => a(1) -> a(2)).map { case (c, kv) => c -> kv.toMap }
+    finally src.close()
+  }
+
+  /** Paths whose digest differs, or that only one side has. */
+  private def differing(a: Map[String, String], b: Map[String, String]): Seq[String] =
+    (a.keySet ++ b.keySet).filter(k => a.get(k) != b.get(k)).toSeq.sorted
+
+  private def assertGolden(dir: String, name: String): Unit = {
+    val diff = differing(fileHashes(dir), golden(name))
+    assert(golden(name).nonEmpty && diff.isEmpty, s"$name segments differ from the golden in: $diff")
   }
 
   test("distributed build + distributed search == brute force") {
@@ -86,19 +106,14 @@ class SparkIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("build output is byte-identical across shuffle partitioning AND build modes") {
-    val d4 = tmpDir(); val d8 = tmpDir(); val ds = tmpDir()
-    IndexBuilder.build(spark, corpus, IndexConfig(d4, docsPerSegment = 64,
+  test("build output matches the segment golden at any shuffle partitioning") {
+    val d2 = tmpDir(); val d8 = tmpDir()
+    IndexBuilder.build(spark, corpus, IndexConfig(d2, docsPerSegment = 64,
       buildPartitions = 2, writeDocMap = false))
     IndexBuilder.build(spark, corpus, IndexConfig(d8, docsPerSegment = 64,
       buildPartitions = 8, writeDocMap = false))
-    IndexBuilder.build(spark, corpus, IndexConfig(ds, docsPerSegment = 64,
-      buildPartitions = 8, writeDocMap = false, buildMode = "sortshuffle"))
-    val h4 = fileHashes(d4)
-    val h8 = fileHashes(d8)
-    val hs = fileHashes(ds)
-    assert(h4.nonEmpty && h4 == h8)
-    assert(h4 == hs, "invert and sortshuffle modes must write identical segments")
+    assertGolden(d2, "corpus")
+    assertGolden(d8, "corpus")
   }
 
   test("resume: killed build restarts from committed segments only") {
@@ -116,7 +131,8 @@ class SparkIndexSpec extends AnyFunSuite {
     val report = IndexBuilder.build(spark, corpus, IndexConfig(resumed, docsPerSegment = 64, writeDocMap = false))
     assert(report.resumedSegments == 5, report)
     assert(report.builtSegments == 3, report)
-    assert(fileHashes(full) == fileHashes(resumed))
+    assertGolden(full, "corpus")
+    assertGolden(resumed, "corpus")
 
     // the resumed index answers queries identically
     val a = new IndexSearcher(spark, full).search(TermQ("w2"), 10, BM25())
@@ -124,7 +140,7 @@ class SparkIndexSpec extends AnyFunSuite {
     assert(a.toSeq == b.toSeq)
   }
 
-  test("supplementary-plane terms: invert and sortshuffle builds agree on order") {
+  test("supplementary-plane terms: code-point order, segments match the golden") {
     import spark.implicits._
     val sup1 = new String(Character.toChars(0x10000))
     val sup2 = new String(Character.toChars(0x1D11E))
@@ -132,27 +148,56 @@ class SparkIndexSpec extends AnyFunSuite {
       "plain common words")
     val df = texts.zipWithIndex
       .map { case (t, i) => (f"u$i%04d", t) }.toDF("url", "text")
-    def termsOf(dir: String): Seq[String] = {
-      val meta = IndexMetaIO.readLatest(dir).get
-      meta.segments.flatMap { m =>
-        val r = new SegmentReader(new File(dir, SegmentFormat.segDirName(m.segId)))
-        val ts = r.allTerms.map(_.term).toSeq
-        assert(ts == ts.sorted(TermOrder.ordering), s"dict order in $dir: $ts")
-        ts
-      }
+    val d = tmpDir()
+    IndexBuilder.build(spark, df, IndexConfig(d, analyzer = "whitespace",
+      docsPerSegment = 2, writeDocMap = false))
+    IndexMetaIO.readLatest(d).get.segments.foreach { m =>
+      val r = new SegmentReader(new File(d, SegmentFormat.segDirName(m.segId)))
+      val ts = r.allTerms.map(_.term).toSeq
+      assert(ts == ts.sorted(TermOrder.ordering), s"dict order in segment ${m.segId}: $ts")
     }
-    val d1 = tmpDir(); val d2 = tmpDir()
-    IndexBuilder.build(spark, df, IndexConfig(d1, analyzer = "whitespace",
-      docsPerSegment = 2, writeDocMap = false, buildMode = "invert"))
-    IndexBuilder.build(spark, df, IndexConfig(d2, analyzer = "whitespace",
-      docsPerSegment = 2, writeDocMap = false, buildMode = "sortshuffle"))
-    assert(termsOf(d1) == termsOf(d2))
-    // both searchable across the surrogate boundary
-    Seq(d1, d2).foreach { d =>
-      val s2 = new IndexSearcher(spark, d)
-      val hits = s2.search(TermRangeQ(Some("\uFFFB"), None,
-        includeLower = true, includeUpper = true), 10, BM25())
-      assert(hits.map(_.docId).toSet == Set(0L, 1L, 2L), s"$d: ${hits.toSeq}")
-    }
+    assertGolden(d, "supplementary")
+    // searchable across the surrogate boundary
+    val hits = new IndexSearcher(spark, d).search(TermRangeQ(Some("\uFFFB"), None,
+      includeLower = true, includeUpper = true), 10, BM25())
+    assert(hits.map(_.docId).toSet == Set(0L, 1L, 2L), hits.toSeq)
+  }
+
+  /** Builds `texts` (docId = position) with LocalIndex and with the
+    * distributed builder; returns the segment files whose bytes differ. */
+  private def localVsDistributed(texts: Seq[String], analyzer: String, docsPerSegment: Int,
+      storePositions: Boolean = true, storeTermVectors: Boolean = false,
+      storePayloads: Boolean = false): Seq[String] = {
+    import spark.implicits._
+    val local = tmpDir(); val dist = tmpDir()
+    LocalIndex.build(local, texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }, analyzer,
+      docsPerSegment, storePositions, storeTermVectors, storePayloads)
+    // zero-padded urls, so url rank == position in `texts`
+    val df = texts.zipWithIndex.map { case (t, i) => (f"u$i%06d", t) }.toDF("url", "text")
+    IndexBuilder.build(spark, df, IndexConfig(dist, analyzer, docsPerSegment, storePositions,
+      writeDocMap = false, storeTermVectors = storeTermVectors, storePayloads = storePayloads))
+    val l = fileHashes(local)
+    assert(l.nonEmpty)
+    differing(l, fileHashes(dist))
+  }
+
+  test("LocalIndex.build writes the same segment bytes as IndexBuilder.build") {
+    // 500 docs at 64 per segment: eight segments, the last one 52 docs
+    val texts = SyntheticCorpus.localPages(N, seed = 11, avgLen = 50, vocab = 400)
+      .sortBy(_.url).map(_.text)
+    // term vectors: the first doc mixes a supplementary-plane term with a
+    // U+E000..U+FFFF term, where UTF-16 and code-point order disagree
+    val sup = new String(Character.toChars(0x1D11E))
+    val vecTexts = Seq(s"$sup \uE000 common", s"\uFFFB zeta $sup common", "plain common words",
+      "common \uFFFB alpha", "")
+    val payTexts = Seq("quick|3 brown fox|9", "lazy dog|2 quick|1 quick|7", "fox fox|4", "dog")
+    val diffs = Seq(
+      "positions" -> localVsDistributed(texts, "standard", 64),
+      "no positions" -> localVsDistributed(texts, "standard", 64, storePositions = false),
+      "vectors" -> localVsDistributed(vecTexts, "whitespace", 2, storeTermVectors = true),
+      "vectors, no positions" -> localVsDistributed(vecTexts, "whitespace", 2,
+        storePositions = false, storeTermVectors = true),
+      "payloads" -> localVsDistributed(payTexts, "delimited", 3, storePayloads = true))
+    assert(diffs.forall(_._2.isEmpty), diffs.filter(_._2.nonEmpty).mkString("; "))
   }
 }
