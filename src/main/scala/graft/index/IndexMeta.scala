@@ -143,10 +143,8 @@ object IndexMetaIO {
     * compaction purges the commit files whose snapshots reference the
     * segments it physically retires (Maintenance.compact), so history
     * truncates exactly where its files go. Only generations whose binary
-    * `.segs` twin survives are listed: the point-in-time open path reads
-    * the twin, so a `.json` whose twin was lost (the legacy case
-    * `readLatest`'s dir-scan fallback covers) must not be advertised as
-    * openable. */
+    * `.segs` twin survives are listed: every open path reads the twin, so
+    * a `.json` whose twin was lost must not be advertised as openable. */
   def commitGens(indexDir: String): Seq[Int] = {
     val cd = new File(indexDir, "commits")
     listCommitGens(cd)
@@ -177,18 +175,12 @@ object IndexMetaIO {
       .sortBy(_.segId)
   }
 
-  /** Read the latest committed snapshot (binary .segs is authoritative —
-    * segments on disk that never made a snapshot are invisible to queries;
-    * legacy fallback scans segment dirs). */
+  /** Read the latest committed snapshot. The binary `.segs` twin is
+    * authoritative: segments on disk that never made a snapshot are
+    * invisible to queries, and a newest commit whose twin is missing reads
+    * as no index (its deletion generation lives only there). */
   def readLatest(indexDir: String): Option[IndexMeta] =
-    latestGen(indexDir).map { gen =>
-      readSnapshot(indexDir, gen).map(_._1).getOrElse {
-        val segs = committedSegments(indexDir)
-        IndexMeta(segs.headOption.map(_.analyzer).getOrElse("standard"),
-          segs.map(_.docCount.toLong).sum, segs.map(_.sumDocLength).sum,
-          segs.forall(_.hasPositions), segs)
-      }
-    }
+    readLatestWithExtra(indexDir).map(_._1)
 
   def readLatestWithExtra(indexDir: String): Option[(IndexMeta, Map[String, String])] =
     latestGen(indexDir).flatMap(gen => readSnapshot(indexDir, gen))

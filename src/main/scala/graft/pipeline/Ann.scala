@@ -293,7 +293,7 @@ object Ann {
         struct(lit(s).as("s"), element_at(col("__pq_codes"), s + 1).as("code"),
           sub.as("v"))
       }
-      val means = train.withColumn("__pq_codes", pqCodeExpr(books, d0))
+      val means = train.withColumn("__pq_codes", pqCodeExpr(books))
         .select(explode(array(perSub: _*)).as("e"))
         .select(col("e.s").as("s"), col("e.code").as("code"),
           posexplode(col("e.v")).as(Seq("pos", "x")))
@@ -311,12 +311,13 @@ object Ann {
     * compact index: m bytes/vector at codewords ≤ 256 versus dim floats.
     * Native codegen expression ([[graft.functions.PqCode]]): one generated
     * pass over the vector instead of m × codewords interpreted
-    * zip_with/aggregate folds (~1.2 ms/row at m=16, cw=32 — measured via
-    * graft.tools.ProbeEncode); pinned value-identical to [[pqCodeSpec]]
-    * (same fold order, same null/tie semantics) in PipelineSpec. */
-  private[graft] def pqCodeExpr(books: Array[Array[Array[Double]]], d0: Int): Column =
+    * zip_with/aggregate folds (~1.2 ms/row at m=16, cw=32); pinned
+    * value-identical to [[pqCodeSpec]] (same fold order, same null/tie
+    * semantics) in PipelineSpec. Each subspace's width is its own
+    * codebook's; the literal copies `books`, so the caller may reuse them. */
+  private[graft] def pqCodeExpr(books: Array[Array[Array[Double]]]): Column =
     graft.functions.VectorOps.pqCode(col("embedding"),
-      books.map(_.map(_.toSeq).toSeq).toSeq)
+      books.map(_.map(_.toVector).toVector).toVector)
 
   /** The pre-r6 built-in composition of [[pqCodeExpr]] — the executable
     * spec the native expression is pinned against (PipelineSpec). */
@@ -400,15 +401,14 @@ object Ann {
     * runs at index build and the codes table is what stays resident
     * (m bytes/vector); repeated [[pqTopK]] calls pass it via `coded`
     * instead of re-encoding per query batch. */
-  def encodePq(embeddings: DataFrame, books: Array[Array[Array[Double]]],
-      dim: Int = 64): DataFrame =
-    embeddings.select(col("vec_id"), pqCodeExpr(books, dim / books.length).as("codes"))
+  def encodePq(embeddings: DataFrame, books: Array[Array[Array[Double]]]): DataFrame =
+    embeddings.select(col("vec_id"), pqCodeExpr(books).as("codes"))
 
   /** IVF-PQ index rows encoded once: (vec_id, cluster, codes). */
   def encodeIvfPq(embeddings: DataFrame, centroids: Array[Array[Double]],
-      books: Array[Array[Array[Double]]], dim: Int = 64): DataFrame =
+      books: Array[Array[Array[Double]]]): DataFrame =
     embeddings.select(col("vec_id"), assignExpr(centroids).as("cluster"),
-      pqCodeExpr(books, dim / books.length).as("codes"))
+      pqCodeExpr(books).as("codes"))
 
   def pqTopK(embeddings: DataFrame, queries: DataFrame, k: Int = 5,
       dim: Int = 64, m: Int = 16, codewords: Int = 32, refine: Int = 8,
@@ -422,7 +422,7 @@ object Ann {
     val spark = embeddings.sparkSession
     val books = trained.getOrElse(trainPq(embeddings, m, codewords, dim = dim))
     val d0 = dim / m
-    val codes = coded.getOrElse(encodePq(embeddings, books, dim))
+    val codes = coded.getOrElse(encodePq(embeddings, books))
     // query-independent reconstructed squared norms per (subspace, codeword)
     val norm2: Seq[Seq[Double]] =
       books.map(_.map(c => c.map(v => v * v).sum).toSeq).toSeq
@@ -457,7 +457,7 @@ object Ann {
     val centroids = trainedIvf.getOrElse(trainIvf(embeddings, clusters))
     val books = trainedPq.getOrElse(trainPq(embeddings, m, codewords, dim = dim))
     val d0 = dim / m
-    val coded = precoded.getOrElse(encodeIvfPq(embeddings, centroids, books, dim))
+    val coded = precoded.getOrElse(encodeIvfPq(embeddings, centroids, books))
     val norm2: Seq[Seq[Double]] =
       books.map(_.map(c => c.map(v => v * v).sum).toSeq).toSeq
     // one driver collect of the (small) query side feeds BOTH the probe

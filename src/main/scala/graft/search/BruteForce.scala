@@ -229,15 +229,10 @@ object BruteForce {
   def search(corpus: Seq[Doc], q0: Query, k: Int, sim: Similarity): Array[ScoredDoc] = {
     val st = stats(corpus)
     val dfm = df(corpus)
-    val expanded =
-      if (!Query.hasMultiTerm(q0)) q0
-      else {
-        val sortedTerms = dfm.keys.toArray.sorted(graft.index.TermOrder.ordering)
-        MultiTerm.expand(q0, lower =>
-          lower.fold(sortedTerms.iterator)(lo =>
-            sortedTerms.iterator.dropWhile(t => graft.index.TermOrder.lt(t, lo))))
-      }
-    val q = Query.rewrite(expanded)
+    lazy val sortedTerms = dfm.keys.toArray.sorted(graft.index.TermOrder.ordering)
+    val q = Query.rewrite(MultiTerm.expand(q0, lower =>
+      lower.fold(sortedTerms.iterator)(lo =>
+        sortedTerms.iterator.dropWhile(t => graft.index.TermOrder.lt(t, lo)))))
     val qn = sim.queryNorm(SegmentSearch.sumOfSquaredWeights(q, sim, st, t => dfm.getOrElse(t, 0L)))
     corpus.flatMap(d => scoreDoc(q, d, sim, st, dfm, qn).map(s => ScoredDoc(d.docId, s)))
       .sortBy(h => (-h.score, h.docId))

@@ -23,6 +23,12 @@ final case class Explanation(
   }
 }
 
+object Explanation {
+  /** What a docId outside every segment explains as. */
+  private[graft] def notInIndex(docId: Long): Explanation =
+    Explanation(0.0, s"doc $docId not in index", matched = false)
+}
+
 /** Builds explanations over a per-doc view. The view is extracted from the
   * real segment files ([[Explain.docView]]), so what gets explained is what
   * was indexed, not a re-analysis. */
@@ -65,6 +71,19 @@ object Explain {
     }
     BruteForce.Doc(localDoc.toLong, posMap.toMap, reader.doclens(localDoc),
       payMap.toMap, segDocCount = reader.meta.docCount)
+  }
+
+  /** The per-segment explain body both searchers run: `q` (expanded and
+    * rewritten, as the scorers see it) explained for each global docId of
+    * `docIds`, all of which lie in `reader`'s segment. */
+  private[graft] def explainSegment(reader: SegmentReader, q: Query, docIds: Seq[Long],
+      sim: Similarity, st: CorpusStats, dfm: Map[String, Long]): Seq[(Long, Explanation)] = {
+    val qn = sim.queryNorm(SegmentSearch.sumOfSquaredWeights(q, sim, st, dfm.getOrElse(_, 0L)))
+    val terms = viewTerms(q)
+    docIds.map { id =>
+      id -> explainDoc(q, docView(reader, (id - reader.meta.docBase).toInt, terms),
+        sim, st, dfm, qn)
+    }
   }
 
   /** Explain `q` against one doc view. `queryNorm` as fed to the scorer

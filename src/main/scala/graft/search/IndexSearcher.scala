@@ -2,10 +2,13 @@ package graft.search
 
 import java.io.File
 
-import org.apache.spark.sql.SparkSession
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.index.{IndexMeta, IndexMetaIO, SegmentFormat, SegmentReader}
-import graft.score.{CorpusStats, Similarity}
+import graft.score.{BM25, CorpusStats, Similarity}
 
 /** Per-executor segment reader cache — segments are immutable, so a
   * process-wide map keyed by path is safe; the mmap'd buffers are shared by
@@ -90,9 +93,17 @@ object FilterCache {
   * (df, N, avgdl) are computed once driver-side and broadcast, and the
   * final merge is a driver heap over ≤ k hits per segment.
   *
-  * Queries are executed in BATCHES: one Spark job computes global df for
-  * all query terms (tiny shuffle: |terms| rows), one job scores all queries
-  * against all segments. Per-query driver work is O(segments · k).
+  * Every entry point (search, explain, match, delete) runs one path.
+  * `prepare` expands multi-term nodes against the dictionary (one job, only
+  * when the batch has such nodes), applies the 1-clause rewrite and
+  * computes global df for all the batch's terms (one job). `scatter`, the
+  * one scatter, broadcasts the df map with the operation's payload, runs
+  * that operation's per-segment body as one task per segment and destroys
+  * the broadcast. The driver merges top-k hits with `ScoredDoc.topK`. The
+  * per-segment bodies (`SegmentSearch.topK`, `Explain.explainSegment`,
+  * `SegmentSearch.markMatches`, `MultiTerm.segmentMatches`) are the ones
+  * LocalIndex runs in a loop. Queries are executed in BATCHES, so
+  * per-query driver work is O(segments · k).
   *
   * `commitGen` opens a POINT-IN-TIME snapshot at that commit generation
   * instead of the latest — the reference's IndexCommit / IndexReader::open
@@ -112,9 +123,6 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     case Some(g) => IndexMetaIO.readSnapshot(indexDir, g)
       .getOrElse(throw new IllegalStateException(s"no commit generation $g at $indexDir"))
     case None => IndexMetaIO.readLatestWithExtra(indexDir)
-      // readLatest's legacy fallback (reconstruct from segment dirs when
-      // the binary snapshot is unreadable), with no commit extras
-      .orElse(IndexMetaIO.readLatest(indexDir).map((_, Map.empty[String, String])))
       .getOrElse(throw new IllegalStateException(s"no committed index at $indexDir"))
   }
   val meta: IndexMeta = snapshot._1
@@ -126,33 +134,103 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     * tombstoned docs until a merge reclaims them, as the reference does. */
   private val delGen: Int = snapshot._2.get("delgen").map(_.toInt).getOrElse(0)
 
-  private def cacheKey(path: String): String =
+  private def segDir(segId: Int): String = {
+    val path = new File(indexDir, SegmentFormat.segDirName(segId)).getPath
     if (delGen == 0) path else s"$path#$delGen"
+  }
 
-  private val segDirs: Seq[String] =
-    meta.segments.map(m =>
-      cacheKey(new File(indexDir, SegmentFormat.segDirName(m.segId)).getPath))
+  private val segDirs: Seq[String] = meta.segments.map(m => segDir(m.segId))
+
+  /** The one scatter: broadcast `dfMap` with the operation's `payload`, run
+    * `body` as one task per element of `parts` (a segment dir, or a dir
+    * with the docIds to explain), hand the lazy result to `run` on the
+    * driver, then destroy the broadcast. `keep` leaves it alive for a
+    * result that is still lazy when this returns. */
+  private def scatter[T: ClassTag, P, R: ClassTag, X](parts: Seq[T], payload: P,
+      dfMap: Map[String, Long] = Map.empty, keep: Boolean = false)(
+      body: (T, P, Map[String, Long]) => IterableOnce[R])(run: RDD[R] => X): X = {
+    val sc = spark.sparkContext
+    val bc = sc.broadcast((payload, dfMap))
+    try run(sc.parallelize(parts, math.max(1, parts.size)).flatMap { part =>
+      val (p, dfm) = bc.value
+      body(part, p, dfm)
+    })
+    finally if (!keep) bc.destroy()
+  }
+
+  /** The one preamble: expand the batch's multi-term nodes against this
+    * index's dictionary, apply the 1-clause rewrite, and compute global df
+    * for every term left. */
+  private def prepare(
+      queries0: Seq[(String, Query)]): (Seq[(String, Query)], Map[String, Long]) = {
+    val queries = IndexSearcher.expandAcross(Seq(this), queries0)
+      .map { case (id, q) => id -> Query.rewrite(q) }
+    (queries, globalDf(queries.flatMap { case (_, q) => Query.allTerms(q) }.toSet))
+  }
+
+  private def prepare(q0: Query): (Query, Map[String, Long]) = {
+    val (queries, dfMap) = prepare(Seq("q" -> q0))
+    (queries.head._2, dfMap)
+  }
 
   /** Global document frequencies for a term set: sum of per-segment df.
     * Exact (the reference's df is exact too — SURVEY.md §2.4). */
-  def globalDf(terms: Set[String]): Map[String, Long] = {
-    if (terms.isEmpty) return Map.empty
-    val sc = spark.sparkContext
-    val bcTerms = sc.broadcast(terms.toSeq)
-    val dfs = sc.parallelize(segDirs, math.max(1, segDirs.size))
-      .flatMap { dir =>
-        val r = ReaderCache.get(dir)
-        bcTerms.value.flatMap(t => r.termInfo(t).map(ti => (t, ti.df.toLong)))
-      }
-      .reduceByKey(_ + _)
-      .collect()
-      .toMap
-    bcTerms.destroy()
-    dfs
-  }
+  def globalDf(terms: Set[String]): Map[String, Long] =
+    if (terms.isEmpty) Map.empty
+    else scatter(segDirs, terms.toSeq) { (dir, ts, _) =>
+      val r = ReaderCache.get(dir)
+      ts.flatMap(t => r.termInfo(t).map(ti => (t, ti.df.toLong)))
+    }(_.reduceByKey(_ + _).collect().toMap)
+
+  /** (node, matched term) pairs from this index's segments — the
+    * distributed half of multi-term expansion. Per-node match is a pure
+    * function of term text, so the union is exactly the global dictionary
+    * expansion (MultiTerm scaladoc); a cross-index MultiSearcher unions
+    * several indexes' pairs before rewriting once, like the reference's
+    * rewrite against the combined reader. */
+  private[search] def multiTermMatches(nodes: Seq[MultiTermQ]): Array[(MultiTermQ, String)] =
+    scatter(segDirs, nodes) { (dir, ns, _) =>
+      val r = ReaderCache.get(dir)
+      ns.iterator.flatMap(n => MultiTerm.segmentMatches(r, n).map(t => (n, t)))
+    }(_.distinct().collect())
 
   def search(q: Query, k: Int, sim: Similarity, useWand: Boolean = true): Array[ScoredDoc] =
     searchBatch(Seq("q" -> q), k, sim, useWand)("q")
+
+  def searchBatch(queries0: Seq[(String, Query)], k: Int, sim: Similarity,
+      useWand: Boolean = true): Map[String, Array[ScoredDoc]] = {
+    val (queries, dfMap) = prepare(queries0)
+    searchBatchWith(queries, k, sim, useWand, stats, dfMap, 0L)
+  }
+
+  /** The post-expansion scatter/merge with CALLER-SUPPLIED scoring stats,
+    * document frequencies, and a docId offset — the hook a cross-index
+    * MultiSearcher uses so every sub-index scores with the combined
+    * corpus's weights (reference MultiSearcher::createWeight +
+    * CachedDfSource, reference src/core/search/MultiSearcher.cpp). */
+  private[search] def searchBatchWith(queries: Seq[(String, Query)], k: Int,
+      sim: Similarity, useWand: Boolean, st: CorpusStats,
+      dfMap: Map[String, Long], docIdOffset: Long): Map[String, Array[ScoredDoc]] = {
+    val mergeTopK = (a: Array[ScoredDoc], b: Array[ScoredDoc]) => ScoredDoc.topK(a ++ b, k)
+    val collected = scatter(segDirs, queries, dfMap) { (dir, qs, dfm) =>
+      val reader = ReaderCache.get(dir)
+      val df = (t: String) => dfm.getOrElse(t, 0L)
+      qs.iterator.map { case (id, q) =>
+        (id, SegmentSearch.topK(reader, q, k, sim, st, df, useWand))
+      }
+    } { perSegment =>
+      // Above a segment-count threshold the merge goes through reduceByKey:
+      // the map-side combiners fold each partition's hits first, so the
+      // driver receives O(queries · k) rows instead of O(segments · k)
+      if (segDirs.size <= 256) perSegment.collect()
+      else perSegment.reduceByKey(mergeTopK, math.max(1, queries.size)).collect()
+    }
+    collected.groupBy(_._1).map { case (id, hits) =>
+      val merged = ScoredDoc.topK(hits.iterator.flatMap(_._2), k)
+      id -> (if (docIdOffset == 0L) merged
+             else merged.map(h => h.copy(docId = h.docId + docIdOffset)))
+    }
+  }
 
   /** Time-budgeted search: each segment task stops collecting once its
     * share of `timeoutMs` elapses and returns what it gathered — partial
@@ -161,71 +239,14 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     * its own clock). */
   def searchWithTimeout(q0: Query, k: Int, sim: Similarity,
       timeoutMs: Long): (Array[ScoredDoc], Boolean) = {
-    val q = Query.rewrite(expandQueries(Seq("q" -> q0)).head._2)
-    val dfMap = globalDf(Query.allTerms(q))
-    val sc = spark.sparkContext
-    val bcDf = sc.broadcast(dfMap)
-    val bcQ = sc.broadcast(q)
+    val (q, dfMap) = prepare(q0)
     val st = stats
     val budgetNanos = timeoutMs * 1000000L
-    val perSegment = sc.parallelize(segDirs, math.max(1, segDirs.size))
-      .map { dir =>
-        val reader = ReaderCache.get(dir)
-        val df = (t: String) => bcDf.value.getOrElse(t, 0L)
-        SegmentSearch.topKTimed(reader, bcQ.value, k, sim, st, df,
-          useWand = false, System.nanoTime() + budgetNanos)
-      }
-      .collect()
-    bcQ.destroy()
-    bcDf.destroy()
-    val hits = perSegment.iterator.flatMap(_._1).toArray
-      .sortBy(h => (-h.score, h.docId)).take(k)
-    (hits, perSegment.exists(_._2))
-  }
-
-  /** Expand multi-term nodes against the distributed term dictionary: one
-    * job collects each node's matching terms per segment (seek + bounded
-    * scan), the driver unions them and rewrites the plan. Per-node match
-    * is a pure function of term text, so the union is exactly the global
-    * dictionary expansion (MultiTerm scaladoc). */
-  private def expandQueries(queries: Seq[(String, Query)]): Seq[(String, Query)] = {
-    if (!queries.exists { case (_, q) => Query.hasMultiTerm(q) }) return queries
-    val nodes: Seq[MultiTermQ] =
-      queries.flatMap { case (_, q) => IndexSearcher.collectMultiTermNodes(q) }.distinct
-    if (nodes.isEmpty) return queries
-    IndexSearcher.rewriteWithTermSets(queries, multiTermMatches(nodes))
-  }
-
-  /** Matched dictionary terms per multi-term node, collected across this
-    * index's segments (the distributed half of expansion — exposed so a
-    * cross-index MultiSearcher can union the sets before rewriting once,
-    * like the reference's rewrite against the combined reader). */
-  private[search] def multiTermMatches(
-      nodes: Seq[MultiTermQ]): Map[MultiTermQ, Seq[String]] = {
-    val sc = spark.sparkContext
-    val bcNodes = sc.broadcast(nodes)
-    val matched: Map[MultiTermQ, Seq[String]] = sc
-      .parallelize(segDirs, math.max(1, segDirs.size))
-      .flatMap { dir =>
-        val r = ReaderCache.get(dir)
-        bcNodes.value.flatMap { node =>
-          val it = r.termsFrom(MultiTerm.seekLowerBound(node))
-          val out = scala.collection.mutable.ArrayBuffer.empty[(MultiTermQ, String)]
-          var done = false
-          while (!done && it.hasNext) {
-            val t = it.next().term
-            if (MultiTerm.pastUpperBound(node, t)) done = true
-            else if (MultiTerm.matchBoost(node, t).isDefined) out += ((node, t))
-          }
-          out
-        }
-      }
-      .distinct()
-      .collect()
-      .groupBy(_._1)
-      .map { case (n, ts) => n -> ts.map(_._2).toSeq.sorted }
-    bcNodes.destroy()
-    matched
+    val perSegment = scatter(segDirs, q, dfMap) { (dir, q, dfm) =>
+      Iterator.single(SegmentSearch.topKTimed(ReaderCache.get(dir), q, k, sim, st,
+        dfm.getOrElse(_, 0L), useWand = false, System.nanoTime() + budgetNanos))
+    }(_.collect())
+    (ScoredDoc.topK(perSegment.iterator.flatMap(_._1), k), perSegment.exists(_._2))
   }
 
   /** ALL matching docIds as a DataFrame — the match-set path. Matches are
@@ -233,29 +254,24 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     * result; nothing is materialized on the driver, so a stop-word phrase
     * over 10^12 docs streams straight to the sink. Scoring is skipped:
     * only the scorer tree's matching behavior runs. */
-  def matchingDocs(q0: Query): org.apache.spark.sql.DataFrame = {
-    val q = Query.rewrite(expandQueries(Seq("q" -> q0)).head._2)
-    val dfMap = globalDf(Query.allTerms(q))
-    val sc = spark.sparkContext
-    val bcDf = sc.broadcast(dfMap)
-    val bcQ = sc.broadcast(q)
+  def matchingDocs(q0: Query): DataFrame = {
+    val (q, dfMap) = prepare(q0)
     val st = stats
-    val sim: Similarity = graft.score.BM25()
-    val rdd = sc.parallelize(segDirs, math.max(1, segDirs.size))
-      .flatMap { dir =>
-        val reader = ReaderCache.get(dir)
-        val df = (t: String) => bcDf.value.getOrElse(t, 0L)
-        val docBase = reader.meta.docBase
-        val qn = sim.queryNorm(SegmentSearch.sumOfSquaredWeights(bcQ.value, sim, st, df))
-        SegmentSearch.scorer(bcQ.value, reader, sim, st, df, qn) match {
-          case None => Iterator.empty
-          case Some(s) =>
-            Iterator.continually(s.nextDoc())
-              .takeWhile(_ != Scorer.NoMoreDocs)
-              .filter(d => !reader.deleted(d))
-              .map(d => docBase + d)
-        }
+    val rdd = scatter(segDirs, q, dfMap, keep = true) { (dir, q, dfm) =>
+      val reader = ReaderCache.get(dir)
+      val df = (t: String) => dfm.getOrElse(t, 0L)
+      val sim = BM25()
+      val docBase = reader.meta.docBase
+      val qn = sim.queryNorm(SegmentSearch.sumOfSquaredWeights(q, sim, st, df))
+      SegmentSearch.scorer(q, reader, sim, st, df, qn) match {
+        case None => Iterator.empty
+        case Some(s) =>
+          Iterator.continually(s.nextDoc())
+            .takeWhile(_ != Scorer.NoMoreDocs)
+            .filter(d => !reader.deleted(d))
+            .map(d => docBase + d)
       }
+    }(identity)
     val sp = spark
     import sp.implicits._
     rdd.toDF("doc_id")
@@ -263,69 +279,28 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
 
   /** Explain the score of one (query, doc) — the reference's
     * Searcher::explain (Explanation value == the score search collects for
-    * a hit; matched=false and 0 for a non-hit). Runs as a one-task Spark
-    * job on the executor side, where the segment files live; only the
-    * explanation tree comes back. */
-  def explain(q0: Query, docId: Long, sim: Similarity): Explanation = {
-    val q = Query.rewrite(expandQueries(Seq("q" -> q0)).head._2)
-    val dfMap = globalDf(Query.allTerms(q))
-    val segMeta = meta.segments.find(m =>
-      docId >= m.docBase && docId < m.docBase + m.docCount)
-      .getOrElse(return Explanation(0.0, s"doc $docId not in index", matched = false))
-    val segDir = cacheKey(new File(indexDir,
-      graft.index.SegmentFormat.segDirName(segMeta.segId)).getPath)
-    val st = stats
-    val sc = spark.sparkContext
-    val bcQ = sc.broadcast(q)
-    val bcDf = sc.broadcast(dfMap)
-    val out = sc.parallelize(Seq(segDir), 1).map { dir =>
-      val reader = ReaderCache.get(dir)
-      val local = (docId - reader.meta.docBase).toInt
-      val df = (t: String) => bcDf.value.getOrElse(t, 0L)
-      val view = Explain.docView(reader, local, Explain.viewTerms(bcQ.value))
-      val qn = sim.queryNorm(SegmentSearch.sumOfSquaredWeights(bcQ.value, sim, st, df))
-      Explain.explainDoc(bcQ.value, view, sim, st, bcDf.value, qn)
-    }.collect().head
-    bcQ.destroy()
-    bcDf.destroy()
-    out
-  }
+    * a hit; matched=false and 0 for a non-hit). Runs on the executor side,
+    * where the segment files live; only the explanation tree comes back. */
+  def explain(q0: Query, docId: Long, sim: Similarity): Explanation =
+    explainMany(q0, Seq(docId), sim).head
 
   /** Batched [[explain]]: every (query, doc) explanation in ONE Spark job
-    * (one task per touched segment, one shared df job and broadcast pair)
-    * instead of a df job + a one-task job per doc. Same per-doc tree as
-    * [[explain]] — identical Explanation values; order follows `docIds`. */
+    * (one task per touched segment, one shared df job and broadcast)
+    * instead of a df job + a one-task job per doc. Order follows
+    * `docIds`. */
   def explainMany(q0: Query, docIds: Seq[Long], sim: Similarity): Seq[Explanation] = {
-    val q = Query.rewrite(expandQueries(Seq("q" -> q0)).head._2)
-    val dfMap = globalDf(Query.allTerms(q))
+    val (q, dfMap) = prepare(q0)
     val st = stats
-    val sc = spark.sparkContext
     val bySeg = docIds.distinct.flatMap { docId =>
       meta.segments.find(m => docId >= m.docBase && docId < m.docBase + m.docCount)
-        .map(m => cacheKey(new File(indexDir,
-          graft.index.SegmentFormat.segDirName(m.segId)).getPath) -> docId)
+        .map(m => segDir(m.segId) -> docId)
     }.groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
-    val results: Map[Long, Explanation] =
+    val found: Map[Long, Explanation] =
       if (bySeg.isEmpty) Map.empty
-      else {
-        val bcQ = sc.broadcast(q)
-        val bcDf = sc.broadcast(dfMap)
-        val out = sc.parallelize(bySeg, bySeg.size).flatMap { case (dir, ids) =>
-          val reader = ReaderCache.get(dir)
-          val df = (t: String) => bcDf.value.getOrElse(t, 0L)
-          val qn = sim.queryNorm(SegmentSearch.sumOfSquaredWeights(bcQ.value, sim, st, df))
-          ids.map { docId =>
-            val local = (docId - reader.meta.docBase).toInt
-            val view = Explain.docView(reader, local, Explain.viewTerms(bcQ.value))
-            docId -> Explain.explainDoc(bcQ.value, view, sim, st, bcDf.value, qn)
-          }
-        }.collect().toMap
-        bcQ.destroy()
-        bcDf.destroy()
-        out
-      }
-    docIds.map(id => results.getOrElse(id,
-      Explanation(0.0, s"doc $id not in index", matched = false)))
+      else scatter(bySeg, q, dfMap) { case ((dir, ids), q, dfm) =>
+        Explain.explainSegment(ReaderCache.get(dir), q, ids, sim, st, dfm)
+      }(_.collect().toMap)
+    docIds.map(id => found.getOrElse(id, Explanation.notInIndex(id)))
   }
 
   /** Delete every doc matching `q` — the reference's
@@ -344,11 +319,7 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     * commit (the reference's IndexWriter::updateDocument,
     * /root/reference/src/core/index/IndexWriter.cpp:981-1004). */
   def deleteDocs(q0: Query, commit: Boolean): Long = {
-    val q = Query.rewrite(expandQueries(Seq("q" -> q0)).head._2)
-    val dfMap = globalDf(Query.allTerms(q))
-    val sc = spark.sparkContext
-    val bcDf = sc.broadcast(dfMap)
-    val bcQ = sc.broadcast(q)
+    val (q, dfMap) = prepare(q0)
     val st = stats
     // the CURRENT committed generation (not this searcher's open-time
     // snapshot — a second batch through the same instance must seed from
@@ -366,37 +337,29 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     // delgen=targetGen below would retroactively adopt a crashed
     // updateDocuments' del_<targetGen>.bin in segments this batch didn't
     // write: its deletes would apply without its adds.
-    locally {
-      val idxDir = indexDir
-      val allSegs = commitMeta.segments
-        .map(m => new File(idxDir, SegmentFormat.segDirName(m.segId)).getPath)
-      sc.parallelize(allSegs, math.max(1, allSegs.size))
-        .foreach(p => SegmentFormat.purgeOrphanDeletes(new File(p), committedGen))
-    }
-    val newly = sc.parallelize(segDirs, math.max(1, segDirs.size))
-      .map { dir =>
-        val reader = ReaderCache.get(dir)
-        val df = (t: String) => bcDf.value.getOrElse(t, 0L)
-        val sim: Similarity = graft.score.BM25()
-        // seed from the CURRENT COMMITTED bitset, NOT the cached reader's
-        // open-time snapshot: this searcher's reader-cache key is pinned to
-        // its open-time delGen, so a second delete batch through the same
-        // searcher instance would otherwise OR into a pre-first-batch bitset
-        // and silently resurrect the first batch's committed tombstones
-        val bits = SegmentFormat.readDeletes(reader.dir, committedGen)
-        val before = bits.cardinality()
-        val qn = sim.queryNorm(SegmentSearch.sumOfSquaredWeights(bcQ.value, sim, st, df))
-        SegmentSearch.scorer(bcQ.value, reader, sim, st, df, qn).foreach { s =>
-          var d = s.nextDoc()
-          while (d != Scorer.NoMoreDocs) { bits.set(d); d = s.nextDoc() }
-        }
-        val added = bits.cardinality() - before
-        if (added > 0) SegmentFormat.writeDeletes(reader.dir, bits, targetGen)
-        added.toLong
-      }
-      .collect().sum
-    bcQ.destroy()
-    bcDf.destroy()
+    val allSegs = commitMeta.segments
+      .map(m => new File(indexDir, SegmentFormat.segDirName(m.segId)).getPath)
+    scatter(allSegs, committedGen) { (path, gen, _) =>
+      SegmentFormat.purgeOrphanDeletes(new File(path), gen)
+      Iterator.empty[Unit]
+    }(_.foreach(_ => ()))
+    val newly = scatter(segDirs, q, dfMap) { (dir, q, dfm) =>
+      val reader = ReaderCache.get(dir)
+      val df = (t: String) => dfm.getOrElse(t, 0L)
+      val sim: Similarity = BM25()
+      // seed from the CURRENT COMMITTED bitset, NOT the cached reader's
+      // open-time snapshot: this searcher's reader-cache key is pinned to
+      // its open-time delGen, so a second delete batch through the same
+      // searcher instance would otherwise OR into a pre-first-batch bitset
+      // and silently resurrect the first batch's committed tombstones
+      val bits = SegmentFormat.readDeletes(reader.dir, committedGen)
+      val before = bits.cardinality()
+      SegmentSearch.markMatches(q, reader, sim, st, df,
+        sim.queryNorm(SegmentSearch.sumOfSquaredWeights(q, sim, st, df)), bits)
+      val added = bits.cardinality() - before
+      if (added > 0) SegmentFormat.writeDeletes(reader.dir, bits, targetGen)
+      Iterator.single(added.toLong)
+    }(_.collect().sum)
     if (newly > 0 && commit) {
       // publish: a fresh snapshot (meta unchanged) whose delgen references
       // the just-written generation — readers flip atomically to it
@@ -407,62 +370,10 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
   }
 
   /** Live (non-tombstoned) doc count — numDocs minus deletions. */
-  def liveDocCount(): Long = {
-    val sc = spark.sparkContext
-    meta.numDocs - sc.parallelize(segDirs, math.max(1, segDirs.size))
-      .map(dir => ReaderCache.get(dir).delCount.toLong).collect().sum
-  }
-
-  def searchBatch(queries0: Seq[(String, Query)], k: Int, sim: Similarity,
-      useWand: Boolean = true): Map[String, Array[ScoredDoc]] = {
-    val queries = expandQueries(queries0)
-    val allTerms = queries.flatMap { case (_, q) => Query.allTerms(q) }.toSet
-    searchBatchWith(queries, k, sim, useWand, stats, globalDf(allTerms), 0L)
-  }
-
-  /** The post-expansion scatter/merge with CALLER-SUPPLIED scoring stats,
-    * document frequencies, and a docId offset — the hook a cross-index
-    * MultiSearcher uses so every sub-index scores with the combined
-    * corpus's weights (reference MultiSearcher::createWeight +
-    * CachedDfSource, /root/reference/src/core/search/MultiSearcher.cpp). */
-  private[search] def searchBatchWith(queries: Seq[(String, Query)], k: Int,
-      sim: Similarity, useWand: Boolean, st0: CorpusStats,
-      dfMap: Map[String, Long], docIdOffset: Long): Map[String, Array[ScoredDoc]] = {
-    val st = st0
-    val sc = spark.sparkContext
-    val bcDf = sc.broadcast(dfMap)
-    val bcQueries = sc.broadcast(queries)
-
-    val perSegment = sc.parallelize(segDirs, math.max(1, segDirs.size))
-      .flatMap { dir =>
-        val reader = ReaderCache.get(dir)
-        val df = (t: String) => bcDf.value.getOrElse(t, 0L)
-        bcQueries.value.iterator.map { case (id, q) =>
-          (id, SegmentSearch.topK(reader, q, k, sim, st, df, useWand))
-        }
-      }
-
-    val mergeTopK: (Array[ScoredDoc], Array[ScoredDoc]) => Array[ScoredDoc] =
-      (a, b) => (a ++ b).sortBy(h => (-h.score, h.docId)).take(k)
-
-    // merge with the reference tie-break (score desc, docId asc). Above a
-    // segment-count threshold the merge goes through reduceByKey — the
-    // map-side combiners fold each partition's hits first, so the driver
-    // receives O(queries · k) rows instead of O(segments · k)
-    val collected =
-      if (segDirs.size <= 256) perSegment.collect()
-      else perSegment.reduceByKey(mergeTopK, math.max(1, queries.size)).collect()
-
-    bcQueries.destroy()
-    bcDf.destroy()
-
-    collected.groupBy(_._1).map { case (id, hits) =>
-      val merged = hits.iterator.flatMap(_._2).toArray
-        .sortBy(h => (-h.score, h.docId)).take(k)
-      id -> (if (docIdOffset == 0L) merged
-             else merged.map(h => h.copy(docId = h.docId + docIdOffset)))
-    }
-  }
+  def liveDocCount(): Long =
+    meta.numDocs - scatter(segDirs, ()) { (dir, _, _) =>
+      Iterator.single(ReaderCache.get(dir).delCount.toLong)
+    }(_.collect().sum)
 }
 
 /** Cross-index searcher — the reference's MultiSearcher over several
@@ -498,61 +409,29 @@ final class MultiIndexSearcher(subs: Seq[IndexSearcher]) {
     // union multi-term expansion across every sub-dictionary, then one
     // rewrite — per-index expansion would pick different fuzzy/budget
     // subsets and make scores incomparable
-    val nodes = queries0
-      .flatMap { case (_, q) => IndexSearcher.collectMultiTermNodes(q) }.distinct
-    val queries =
-      if (nodes.isEmpty) queries0
-      else {
-        val union = subs.map(_.multiTermMatches(nodes))
-          .foldLeft(Map.empty[MultiTermQ, Seq[String]]) { (acc, m) =>
-            m.foldLeft(acc) { case (a, (n, ts)) =>
-              a.updated(n, (a.getOrElse(n, Nil) ++ ts).distinct.sorted)
-            }
-          }
-        IndexSearcher.rewriteWithTermSets(queries0, union)
-      }
-    val allTerms = queries.flatMap { case (_, q) => Query.allTerms(q) }.toSet
-    val dfMap = globalDf(allTerms)
+    val queries = IndexSearcher.expandAcross(subs, queries0)
+    val dfMap = globalDf(queries.flatMap { case (_, q) => Query.allTerms(q) }.toSet)
     val perSub = subs.zip(starts).map { case (s, base) =>
       s.searchBatchWith(queries, k, sim, useWand, stats, dfMap, base)
     }
     queries.map { case (id, _) =>
-      id -> perSub.iterator.flatMap(_.getOrElse(id, Array.empty[ScoredDoc]))
-        .toArray.sortBy(h => (-h.score, h.docId)).take(k)
+      id -> ScoredDoc.topK(perSub.iterator.flatMap(_.get(id).iterator.flatten), k)
     }.toMap
   }
 }
 
 object IndexSearcher {
 
-  private[search] def collectMultiTermNodes(q: Query): Seq[MultiTermQ] = q match {
-    case mt: MultiTermQ => Seq(mt)
-    case BoolQ(m, s, n, _) => (m ++ s ++ n).flatMap(collectMultiTermNodes)
-    case ConstantScoreQ(inner, _) => collectMultiTermNodes(inner)
-    case CachedQ(inner) => collectMultiTermNodes(inner)
-    case CustomScoreQ(sub, _, _, _) => collectMultiTermNodes(sub)
-    case DisMaxQ(ds, _, _) => ds.flatMap(collectMultiTermNodes)
-    case FilteredQ(q2, f) => collectMultiTermNodes(q2) ++ collectMultiTermNodes(f)
-    case _ => Nil
-  }
-
-  /** Rewrite with per-node term sets (expand consumes a term iterator; feed
-    * it the node's own matched list by re-dispatching per node). */
-  private[search] def rewriteWithTermSets(queries: Seq[(String, Query)],
-      termSets: Map[MultiTermQ, Seq[String]]): Seq[(String, Query)] = {
-    def rewriteTree(q: Query): Query = q match {
-      case mt: MultiTermQ =>
-        val terms = termSets.getOrElse(mt, Nil)
-        MultiTerm.expand(mt, _ => terms.iterator)
-      case BoolQ(m, s, n, msm) =>
-        BoolQ(m.map(rewriteTree), s.map(rewriteTree), n.map(rewriteTree), msm)
-      case ConstantScoreQ(inner, boost) => ConstantScoreQ(rewriteTree(inner), boost)
-      case CachedQ(inner) => CachedQ(rewriteTree(inner))
-      case cs: CustomScoreQ => cs.copy(sub = rewriteTree(cs.sub))
-      case DisMaxQ(ds, tie, boost) => DisMaxQ(ds.map(rewriteTree), tie, boost)
-      case FilteredQ(q2, f) => FilteredQ(rewriteTree(q2), rewriteTree(f))
-      case other => other
+  /** Expand every multi-term node of the batch against the union of
+    * `searchers`' dictionaries: one dictionary-scan job per searcher, and
+    * none when the batch has no multi-term node. */
+  private[search] def expandAcross(searchers: Seq[IndexSearcher],
+      queries: Seq[(String, Query)]): Seq[(String, Query)] = {
+    val nodes = queries.flatMap { case (_, q) => MultiTerm.nodes(q) }.distinct
+    if (nodes.isEmpty) queries
+    else {
+      val termsOf = MultiTerm.termSets(searchers.flatMap(_.multiTermMatches(nodes)))
+      queries.map { case (id, q) => id -> MultiTerm.expandNodes(q, termsOf) }
     }
-    queries.map { case (id, q) => id -> rewriteTree(q) }
   }
 }

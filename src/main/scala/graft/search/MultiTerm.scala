@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.index.TermOrder
+import graft.index.{SegmentReader, TermOrder}
 
 /** Multi-term expansion: rewrite Prefix/Wildcard/TermRange/Fuzzy nodes into
   * explicit term disjunctions against the index's term dictionary — the
@@ -121,15 +121,59 @@ object MultiTerm {
     prev(b.length)
   }
 
-  /** Expand all multi-term nodes using `termsFrom`: a sorted term iterator
-    * starting at the given lower bound (merged dictionary view). Expanded
-    * terms come back sorted; the rewrite keeps the reference's semantics:
-    * constant-score nodes become ConstantScoreQ(OR), scoring nodes a plain
-    * OR of boosted TermQs. Nodes that match nothing become an
-    * unsatisfiable empty BoolQ. */
-  def expand(q: Query, termsFrom: Option[String] => Iterator[String]): Query = q match {
-    case mt: MultiTermQ =>
-      val it = termsFrom(seekLowerBound(mt))
+  /** One segment's dictionary scan for `node`: seek to its lower bound,
+    * stop past its upper bound, keep the terms it matches — in dictionary
+    * order. Both searchers run it per segment; the union over segments is
+    * the node's global expansion (see the object's scaladoc). */
+  private[graft] def segmentMatches(reader: SegmentReader, node: MultiTermQ): Iterator[String] =
+    reader.termsFrom(seekLowerBound(node)).map(_.term)
+      .takeWhile(t => !pastUpperBound(node, t))
+      .filter(t => matchBoost(node, t).isDefined)
+
+  /** Each node's matched terms, distinct and in dictionary order, from
+    * (node, term) pairs gathered over any number of segments or indexes. */
+  private[graft] def termSets(
+      matches: Iterable[(MultiTermQ, String)]): MultiTermQ => Iterator[String] = {
+    val sets = matches.groupMap(_._1)(_._2)
+      .map { case (n, ts) => n -> ts.toSeq.distinct.sorted(TermOrder.ordering) }
+    n => sets.getOrElse(n, Nil).iterator
+  }
+
+  /** The one walk over a query's multi-term nodes: `q` with every node
+    * replaced by `f(node)`, in tree order. */
+  private[graft] def mapNodes(q: Query)(f: MultiTermQ => Query): Query = q match {
+    case mt: MultiTermQ => f(mt)
+    case BoolQ(m, s, n, msm) =>
+      BoolQ(m.map(mapNodes(_)(f)), s.map(mapNodes(_)(f)), n.map(mapNodes(_)(f)), msm)
+    case ConstantScoreQ(inner, boost) => ConstantScoreQ(mapNodes(inner)(f), boost)
+    case CachedQ(inner) => CachedQ(mapNodes(inner)(f))
+    case cs: CustomScoreQ => cs.copy(sub = mapNodes(cs.sub)(f))
+    case DisMaxQ(ds, tie, boost) => DisMaxQ(ds.map(mapNodes(_)(f)), tie, boost)
+    case FilteredQ(q2, fq) => FilteredQ(mapNodes(q2)(f), mapNodes(fq)(f))
+    case other => other
+  }
+
+  /** Every multi-term node of `q`, in tree order. */
+  private[graft] def nodes(q: Query): Seq[MultiTermQ] = {
+    val found = scala.collection.mutable.ArrayBuffer.empty[MultiTermQ]
+    mapNodes(q) { n => found += n; n }
+    found.toSeq
+  }
+
+  /** Expand against a merged dictionary view: `termsFrom` iterates the
+    * sorted dictionary from a lower bound. */
+  def expand(q: Query, termsFrom: Option[String] => Iterator[String]): Query =
+    expandNodes(q, n => termsFrom(seekLowerBound(n)))
+
+  /** Expand every multi-term node from its own candidate terms: `termsOf`
+    * iterates a node's terms in dictionary order (its matches, or the
+    * dictionary from its lower bound). Expanded terms come back sorted;
+    * the rewrite keeps the reference's semantics: constant-score nodes
+    * become ConstantScoreQ(OR), scoring nodes a plain OR of boosted TermQs.
+    * Nodes that match nothing become an unsatisfiable empty BoolQ. */
+  private[graft] def expandNodes(q: Query, termsOf: MultiTermQ => Iterator[String]): Query =
+    mapNodes(q) { mt =>
+      val it = termsOf(mt)
       val matched = scala.collection.mutable.ArrayBuffer.empty[TermQ]
       var done = false
       while (!done && it.hasNext) {
@@ -162,14 +206,5 @@ object MultiTerm {
               s"(maxClauseCount = $MaxClauseCount); use a constant-score rewrite")
         case _ => BoolQ(should = matched.toSeq)
       }
-    case BoolQ(m, s, n, msm) =>
-      BoolQ(m.map(expand(_, termsFrom)), s.map(expand(_, termsFrom)),
-        n.map(expand(_, termsFrom)), msm)
-    case ConstantScoreQ(inner, boost) => ConstantScoreQ(expand(inner, termsFrom), boost)
-    case CachedQ(inner) => CachedQ(expand(inner, termsFrom))
-    case cs: CustomScoreQ => cs.copy(sub = expand(cs.sub, termsFrom))
-    case DisMaxQ(ds, tie, boost) => DisMaxQ(ds.map(expand(_, termsFrom)), tie, boost)
-    case FilteredQ(q2, f) => FilteredQ(expand(q2, termsFrom), expand(f, termsFrom))
-    case other => other
-  }
+    }
 }

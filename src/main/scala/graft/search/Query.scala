@@ -263,17 +263,6 @@ object Query {
     case _ => false
   }
 
-  def hasMultiTerm(q: Query): Boolean = q match {
-    case _: MultiTermQ => true
-    case BoolQ(m, s, n, _) => (m ++ s ++ n).exists(hasMultiTerm)
-    case ConstantScoreQ(inner, _) => hasMultiTerm(inner)
-    case CachedQ(inner) => hasMultiTerm(inner)
-    case CustomScoreQ(sub, _, _, _) => hasMultiTerm(sub)
-    case DisMaxQ(ds, _, _) => ds.exists(hasMultiTerm)
-    case FilteredQ(q2, f) => hasMultiTerm(q2) || hasMultiTerm(f)
-    case _ => false
-  }
-
   /** Normalize: collapse 1-clause booleans (reference
     * BooleanQuery.cpp:87-102 rewrite). */
   def rewrite(q: Query): Query = q match {

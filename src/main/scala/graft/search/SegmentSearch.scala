@@ -5,6 +5,17 @@ import graft.score.{CorpusStats, Similarity, TermWeight}
 
 final case class ScoredDoc(docId: Long, score: Double)
 
+object ScoredDoc {
+  /** The reference's hit order (HitQueue.cpp:20-26): score desc, then
+    * docId asc. */
+  private val order: Ordering[ScoredDoc] = Ordering.by((h: ScoredDoc) => (-h.score, h.docId))
+
+  /** The one top-k merge: the `k` best of `hits` in [[order]], best first.
+    * Every searcher merges per-segment (and per-index) hits through it. */
+  private[graft] def topK(hits: IterableOnce[ScoredDoc], k: Int): Array[ScoredDoc] =
+    hits.iterator.toArray.sorted(order).take(k)
+}
+
 /** Bounded top-k min-heap with the reference's tie-break: score desc, then
   * docID asc (/root/reference/src/core/search/HitQueue.cpp:20-26;
   * sentinel-prefill idea from TopScoreDocCollector.cpp:18-34). Root = the
@@ -58,10 +69,8 @@ final class TopKCollector(k: Int) {
   }
 
   /** Results best-first. */
-  def results(): Array[ScoredDoc] = {
-    val out = (0 until size).map(i => ScoredDoc(docs(i), scores(i))).toArray
-    out.sortBy(h => (-h.score, h.docId))
-  }
+  def results(): Array[ScoredDoc] =
+    ScoredDoc.topK((0 until size).iterator.map(i => ScoredDoc(docs(i), scores(i))), size)
 }
 
 /** Unsynchronized diagnostic counters for the WAND loop — read by the
@@ -254,12 +263,8 @@ object SegmentSearch {
     case CachedQ(inner) =>
       // memoized match bitset per (segment, filter) — scoreless
       val bits = FilterCache.getOrCompute(reader.dir.getPath, inner) {
-        val b = new java.util.BitSet(reader.meta.docCount)
-        scorer(inner, reader, sim, stats, df, queryNorm).foreach { s =>
-          var d = s.nextDoc()
-          while (d != Scorer.NoMoreDocs) { b.set(d); d = s.nextDoc() }
-        }
-        b
+        markMatches(inner, reader, sim, stats, df, queryNorm,
+          new java.util.BitSet(reader.meta.docCount))
       }
       if (bits.isEmpty) None else Some(new BitSetScorer(bits, 0.0))
 
@@ -330,6 +335,18 @@ object SegmentSearch {
           }
         }
       }
+  }
+
+  /** Set in `bits` every local doc `q` matches in this segment, tombstones
+    * included; returns `bits`. Only the scorer tree's matching runs. */
+  private[graft] def markMatches(q: Query, reader: SegmentReader, sim: Similarity,
+      stats: CorpusStats, df: String => Long, queryNorm: Float,
+      bits: java.util.BitSet): java.util.BitSet = {
+    scorer(q, reader, sim, stats, df, queryNorm).foreach { s =>
+      var d = s.nextDoc()
+      while (d != Scorer.NoMoreDocs) { bits.set(d); d = s.nextDoc() }
+    }
+    bits
   }
 
   /** Per-doc value of a source within one segment (function package). */

@@ -152,7 +152,7 @@ class PipelineSpec extends AnyFunSuite {
     // coded/trained contract: pre-encoded codes without the codebooks that
     // produced them must fail loudly, never silently retrain and mis-score
     val books = Ann.trainPq(emb, m = 4, codewords = 8, dim = 16)
-    val codes = Ann.encodePq(emb, books, dim = 16)
+    val codes = Ann.encodePq(emb, books)
     intercept[IllegalArgumentException] {
       Ann.pqTopK(emb, q, k = 1, dim = 16, m = 4, codewords = 8, coded = Some(codes))
     }
@@ -722,7 +722,7 @@ class PipelineSpec extends AnyFunSuite {
 
     Seq(books(16, 32, 4), books(8, 16, 8), tied).foreach { bs =>
       val d0 = bs(0)(0).length
-      val both = vdf.select(Ann.pqCodeExpr(bs, d0).as("n"), Ann.pqCodeSpec(bs, d0).as("s"))
+      val both = vdf.select(Ann.pqCodeExpr(bs).as("n"), Ann.pqCodeSpec(bs, d0).as("s"))
         .collect()
       both.foreach { r =>
         assert(r.getSeq[Any](0) == r.getSeq[Any](1),
@@ -734,9 +734,24 @@ class PipelineSpec extends AnyFunSuite {
     // the interpreted spec there too
     val pe = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val bs = books(16, 32, 4)
-    val scanBacked = pe.select(Ann.pqCodeExpr(bs, 4).as("n"), Ann.pqCodeSpec(bs, 4).as("s"))
+    val scanBacked = pe.select(Ann.pqCodeExpr(bs).as("n"), Ann.pqCodeSpec(bs, 4).as("s"))
     assert(scanBacked.queryExecution.executedPlan.toString.contains("pq_code"))
     scanBacked.collect().foreach(r => assert(r.getSeq[Any](0) == r.getSeq[Any](1)))
+  }
+
+  test("pq_code keeps its own copy of the codebooks") {
+    val rnd = new scala.util.Random(12)
+    val bs = Array.fill(4, 8, 4)(rnd.nextGaussian())
+    val pristine = bs.map(_.map(_.clone()))
+    val vdf = (0 until 30).map(i => (i.toLong, Seq.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    def codes(c: org.apache.spark.sql.Column) = vdf.select(c).collect().map(_.getSeq[Any](0)).toSeq
+    val native = Ann.pqCodeExpr(bs)
+    // the caller reuses its arrays after building the column
+    bs.foreach(_.foreach(c => c.indices.foreach(i => c(i) = -c(i))))
+    val want = codes(Ann.pqCodeSpec(pristine, 4))
+    assert(codes(Ann.pqCodeSpec(bs, 4)) != want, "mutation must change the spec's codes")
+    assert(codes(native) == want)
   }
 
   test("quality mean_token_len: translate-based count == interpreted fold") {
